@@ -46,6 +46,10 @@ _CFG = CrawlConfig()
 KERNEL_SAMPLE = 2000
 IMAGE_SAMPLE = 300
 STORE_PROBE_WAVES = 2
+#: the 1-core scaling leg takes about a minute; a traced run that has
+#: lasted longer than this when it gets there skips it, so that the run
+#: ends within the 180 s a run may take
+SCALE_LEG_LATEST_S = 100.0
 
 #: (name, unit, better) of every per-layer metric, in report order
 PER_LAYER = [
@@ -86,7 +90,7 @@ PER_LAYER = [
 ]
 PER_LAYER_UNITS = {n: u for n, u, _ in PER_LAYER}
 #: measured only in wide_wave's traced run: its 1-core leg starts a second
-#: JVM pinned to one core, which takes about a minute on 4 cores
+#: JVM pinned to one core
 WIDE_WAVE_LAYER_UNITS = {"scale.eff_1to4": "ratio"}
 
 
@@ -103,8 +107,29 @@ def _timed(tracer, name, fn):
 
 
 def probe_params(seed: int) -> G.GraphParams:
-    """The wide-wave graph of the layer probes and of the scaling legs."""
+    """The wide-wave graph of the layer probes (wide_wave's own size)."""
     return G.GraphParams(hosts=10, pages_per_host=500, fanout=16, seed=seed)
+
+
+def scale_params(seed: int) -> G.GraphParams:
+    """The wide-wave graph of the scaling legs and the tracing-overhead
+    waves: smaller than the probes' so the 1-core leg keeps the traced
+    run within its time limit."""
+    return G.GraphParams(hosts=2, pages_per_host=500, fanout=16, seed=seed)
+
+
+def scale_waves(spark, seed: int, work: str, tracer=None) -> list[dict]:
+    """Wide waves on the scale graph after a warm-up op on the same graph
+    (so every leg runs them with the same plans compiled): one untraced
+    wave, or with ``tracer`` an untraced, a traced and an untraced one."""
+    sw = WideWave(seed, work, params=scale_params(seed))
+    sw.make_inputs(spark, {})
+    sw.run_op(spark, NO_TRACE, "warm", sw.legs(sw.inputs, None))
+    recs = [sw.op(spark, t) for t in
+            ((NO_TRACE, tracer, NO_TRACE) if tracer else (NO_TRACE,))]
+    for rec in recs:
+        rec["problems"] = sw.check(rec)
+    return recs
 
 
 def crawl_metrics(rec: dict) -> dict:
@@ -273,23 +298,24 @@ def measure_layers(spark, wl, recs: list[dict], rounds: list[dict], tracer,
 
     # -- tracing overhead: a wide wave untraced, traced, untraced -------
     # (later runs of a plan are faster, so the traced one sits in between)
-    before = ww.op(spark, NO_TRACE)
-    traced = ww.op(spark, tracer)
-    after = ww.op(spark, NO_TRACE)
+    before, traced, after = scale_waves(spark, seed, work, tracer)
     notes["trace_overhead_crawl_s"] = traced["crawl_s"] - (
         before["crawl_s"] + after["crawl_s"]) / 2
     notes["jobs_per_wave_untraced_traced"] = [before["jobs_per_wave"],
                                               traced["jobs_per_wave"]]
+    notes["scale_wave_problems"] = [p for r in (before, traced, after)
+                                    for p in r["problems"]]
 
     # -- 1 -> 4 core scaling of a wide wave (wide_wave only) ---------------
-    if isinstance(wl, WideWave):
-        sw = WideWave(seed, work, params=probe_params(seed))
-        sw.make_inputs(spark, {})
-        sw.warm_up(spark)
-        with tracer.span("scale.local4"):
-            t4 = sw.op(spark, NO_TRACE)["wall_s"]
+    elapsed = time.perf_counter() - tracer.spans[0]["start"]
+    if isinstance(wl, WideWave) and elapsed > SCALE_LEG_LATEST_S:
+        notes["scale_leg_skipped_at_s"] = elapsed
+    elif isinstance(wl, WideWave):
+        t4 = before["wall_s"]  # the 1-core leg times its first wave too
         with tracer.span("scale.local1"):
-            t1 = _scale_subprocess(seed)
+            leg1 = _scale_subprocess(seed)
+        t1 = leg1["wall_s"]
+        notes["scale_local1_problems"] = leg1["problems"]
         m["scale.eff_1to4"] = t1 / t4 / cores
         notes["scale_local1_s"], notes["scale_local4_s"] = t1, t4
 
@@ -300,7 +326,7 @@ def measure_layers(spark, wl, recs: list[dict], rounds: list[dict], tracer,
     return {n: m[n] for n in names}, notes
 
 
-def _scale_subprocess(seed: int) -> float:
+def _scale_subprocess(seed: int) -> dict:
     """The 1-core leg, pinned to core 0 in its own process and JVM."""
     cmd = [sys.executable, os.path.join(os.path.dirname(__file__), "run.py"),
            "--workload", "wide_wave", "--seed", str(seed), "--seconds", "0",
@@ -309,7 +335,7 @@ def _scale_subprocess(seed: int) -> float:
         cmd = ["taskset", "-c", "0", *cmd]
     out = subprocess.run(cmd, capture_output=True, text=True, timeout=170,
                          check=True)
-    return json.loads(out.stdout.strip().splitlines()[-1])["wall_s"]
+    return json.loads(out.stdout.strip().splitlines()[-1])
 
 
 def scale_leg(seed: int, work: str, cores: int) -> dict:
@@ -321,11 +347,8 @@ def scale_leg(seed: int, work: str, cores: int) -> dict:
     spark = start_session(work, cores)
     try:
         ship_package(spark)
-        ww = WideWave(seed, work, params=probe_params(seed))
-        ww.make_inputs(spark, {})
-        ww.warm_up(spark)
-        rec = ww.op(spark, NO_TRACE)
+        rec = scale_waves(spark, seed, work)[0]
         return {"wall_s": rec["wall_s"], "cores": cores,
-                "problems": ww.check(rec)}
+                "problems": rec["problems"]}
     finally:
         stop_jvm(spark)

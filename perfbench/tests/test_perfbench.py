@@ -112,6 +112,18 @@ def test_guard_stop_is_a_failed_op_with_its_waves_kept(session):
     assert R.result_line(s, {}, False)["correct"] is False
 
 
+def test_measure_runs_at_least_min_ops():
+    class Stub:
+        def op(self, _spark, _tracer):
+            return {"wall_s": 0.0}
+
+        def check(self, _rec):
+            return []
+
+    recs, fails = R.measure(Stub(), None, 0, NO_TRACE, min_ops=3)
+    assert len(recs) == 3 and fails == []
+
+
 def _bench_json():
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         return json.load(f)

@@ -2,9 +2,10 @@
 
 Each workload builds its inputs from the seed (``make_inputs``), warms
 up (``warm_up``), runs one operation per ``op`` call through the
-engine's public API, and knows the outputs that operation must produce
-(``expected``). Timing sections end once the outputs are materialized;
-comparing them with the expectation happens outside (``check``).
+engine's public API (at least ``min_ops`` of them in a measured run),
+and knows the outputs that operation must produce (``expected``).
+Timing sections end once the outputs are materialized; comparing them
+with the expectation happens outside (``check``).
 
 - bfs_exhaust: BFS to exhaustion with table fetch, global dedup, Bloom on,
   no politeness. Many small waves, so fixed per-wave cost dominates.
@@ -129,6 +130,10 @@ class _GraphCrawl:
 
     name = ""
     guard = False
+    #: a measured run takes the median of at least this many ops
+    min_ops = 3
+    #: waves of the warm-up op (None: the whole op)
+    warm_waves: int | None = None
 
     def __init__(self, seed: int, work: str, params: G.GraphParams,
                  cfg: CrawlConfig):
@@ -158,9 +163,11 @@ class _GraphCrawl:
                        "seeds": G.seeds_df(spark, self.params, N_SEEDS)}
 
     def warm_up(self, spark) -> None:
-        """Run the op once: the first run of each plan in a JVM compiles
-        it, and the Python workers start."""
-        self.run_op(spark, NO_TRACE, "warm", self.legs(self.inputs, None))
+        """Run the op once, or its first ``warm_waves`` waves: the first
+        run of each plan in a JVM compiles it, and the Python workers
+        start."""
+        self.run_op(spark, NO_TRACE, "warm",
+                    self.legs(self.inputs, self.warm_waves))
 
     def op(self, spark, tracer) -> dict:
         self.ops += 1
@@ -218,7 +225,7 @@ class BfsExhaust(_GraphCrawl):
             seed, work,
             G.GraphParams(hosts=3, pages_per_host=6, fanout=16, seed=seed)
             if small else
-            G.GraphParams(hosts=16, pages_per_host=40, fanout=16, seed=seed),
+            G.GraphParams(hosts=8, pages_per_host=10, fanout=64, seed=seed),
             _crawl_cfg(parallelism=0, bloom_enabled=True, global_dedup=True))
 
     def _compute_expected(self):
@@ -241,7 +248,7 @@ class WideWave(_GraphCrawl):
             params or (
                 G.GraphParams(hosts=3, pages_per_host=6, fanout=16, seed=seed)
                 if small else
-                G.GraphParams(hosts=25, pages_per_host=500, fanout=16,
+                G.GraphParams(hosts=10, pages_per_host=500, fanout=16,
                               seed=seed)),
             _crawl_cfg(parallelism=0, bloom_enabled=True, global_dedup=True))
 
@@ -278,6 +285,9 @@ def wide_frontier(pages):
 class PoliteResume(_GraphCrawl):
     name = "polite_resume"
     guard = True
+    min_ops = 1
+    # the first wave only: the whole op takes minutes on the seed code
+    warm_waves = 1
     LEG1_WAVES = 8
 
     def __init__(self, seed: int, work: str, small: bool = False):
@@ -292,10 +302,6 @@ class PoliteResume(_GraphCrawl):
 
     def _compute_expected(self):
         return oracle.expected_per_seed_crawl(self.params, N_SEEDS, self.cfg)
-
-    def warm_up(self, spark):
-        # the first wave only: the whole op takes minutes on the seed code
-        self.run_op(spark, NO_TRACE, "warm", self.legs(self.inputs, 1))
 
     def make_inputs(self, spark, timings):
         super().make_inputs(spark, timings)
@@ -335,6 +341,7 @@ class CorpusDedup:
     """The five pair-engine queries over a seed-permuted documents table."""
 
     name = "corpus_dedup"
+    min_ops = 1
 
     def __init__(self, seed: int, work: str, small: bool = False):
         self.seed = seed
