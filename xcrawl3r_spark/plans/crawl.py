@@ -13,13 +13,18 @@ Per-iteration dataflow (SURVEY §3.4):
       --(robots allow/deny broadcast join -> flag, optional)-->       north
       --(per-(seed,host) budget top-k; ineligible rows ride along
          flagged — ONE checkpoint/iter; overflow requeued)-->         A1
-      --(salted repartition, fetch = left join vs pages)-->           S4
+      --(fetch = left join vs pages)-->                               S4
+      --(wide waves only: repartition sized from the selected count)
       --(mapInPandas extraction: href/src/regex + .min. variants)--> E1-E4
-      --(scope rlike)--> edges append (emit-per-occurrence)          F1/D3
+      --(scope rlike; ONE checkpoint/iter)--> edges append           F1/D3
       frontier[i+1] = extracted ∪ overflow, depth-gated              A4
 
 All loop state is localCheckpoint()-ed each iteration (breaks Catalyst
-lineage growth); with ``cfg.checkpoint_dir`` every iteration also commits
+lineage growth). The two per-iteration checkpoints also count rows on
+the way through (``DataFrame.observe``, no extra job): the flagged
+counts size the fetch + extraction stage, and the extracted counts tell
+whether a next wave exists, so the loop never runs an emptiness probe.
+With ``cfg.checkpoint_dir`` every iteration also commits
 frontier/seen/edges/images/errors snapshots through SnapshotStore, and
 ``Crawler.resume()`` continues bit-identically from the last commit
 (deterministic data plane: no wall clock, no RNG).
@@ -29,10 +34,11 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
+from functools import cached_property, reduce
 from typing import Callable
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from xcrawl3r_spark.config import CrawlConfig
@@ -58,6 +64,22 @@ from xcrawl3r_spark.sinks.tables import (
 
 FRONTIER_COLS = ["seed_id", "url", "url_hash", "dedup_key", "host", "depth",
                  "disc_iter", "src_url"]
+EDGES_SCHEMA = ("seed_id string, src_url string, url string, kind string, "
+                "depth int, iter int")
+IMAGES_SCHEMA = "seed_id string, url string, iter int"
+ERRORS_SCHEMA = "seed_id string, url string, error string, stage string, iter int"
+SEEN_SCHEMA = ("seed_id string, url string, url_hash long, dedup_key long, "
+               "host string, depth int, iter int")
+
+#: selected rows per extraction task. In a wave with at least twice this
+#: many selected rows, the fetched pages (the selected rows ahead of the
+#: fetch, with fetch_mode="http") are hash-repartitioned on url into
+#: min(defaultParallelism, selected // EXTRACT_ROWS_PER_TASK) tasks;
+#: smaller waves keep the partitioning they arrive with (often one
+#: AQE-coalesced partition). A Python task costs ~0.15-0.25 s to start
+#: (CLAUDE.md) and extract_occurrences ~0.2 ms per row, so a task below
+#: ~1,000 rows spends more on its start than on its rows.
+EXTRACT_ROWS_PER_TASK = 1_000
 
 
 def _ckpt(df: DataFrame) -> DataFrame:
@@ -72,6 +94,21 @@ def _ckpt(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
 
 
+def _ckpt_counted(df: DataFrame, **conds: Column) -> tuple[DataFrame, dict]:
+    """``_ckpt`` plus, per keyword, the number of rows matching its
+    condition — counted by the checkpoint's own job (an ``Observation``),
+    so no extra job runs. ``Observation.get`` waits for the listener
+    event the checkpoint action posts (milliseconds)."""
+    obs = Observation()
+    out = _ckpt(df.observe(
+        obs, *[F.count_if(c).alias(k) for k, c in conds.items()]))
+    return out, obs.get
+
+
+def _union_all(parts: list[DataFrame]) -> DataFrame:
+    return reduce(DataFrame.unionByName, parts)
+
+
 @dataclass
 class CrawlResult:
     edges: DataFrame    # seed_id, src_url, url, kind, depth, iter
@@ -79,11 +116,22 @@ class CrawlResult:
     images: DataFrame   # seed_id, url, iter
     errors: DataFrame   # seed_id, url, error, stage, iter
     iterations: int = 0
-    #: per-iteration wall-clock phase timings + row counts (A6 metrics)
+    #: one dict per iteration run by this call: wall-clock phase timings
+    #: (t_new, t_fetch_extract, t_frontier, t_store) and row counts read
+    #: from the iteration's checkpoint jobs (selected, overflow, children,
+    #: edges) plus the task count of its fetch + extraction stage
     metrics: list[dict] = field(default_factory=list)
-    #: the final probabilistic seen-filter (all seen keys folded) — feed
-    #: to expire_seen()/crawl(initial_filter=...) for TTL re-crawls
-    seen_filter: dict | None = None
+    #: builds the final seen-filter; read it through ``seen_filter``
+    fold_filter: Callable[[], dict | None] | None = field(
+        default=None, repr=False)
+
+    @cached_property
+    def seen_filter(self) -> dict | None:
+        """The final probabilistic seen-filter (all seen keys folded) —
+        feed to expire_seen()/crawl(initial_filter=...) for TTL
+        re-crawls. Folding the last increments is a Spark job, so it runs
+        on first read only."""
+        return self.fold_filter() if self.fold_filter is not None else None
 
 
 class Crawler:
@@ -144,6 +192,18 @@ class Crawler:
         if self.cfg.filter_kind == "cuckoo":
             return merge_cuckoos(dst, src)
         return merge_blooms(dst, src)
+
+    def _fold_filter(self, filt, key_parts: list[DataFrame]):
+        """Fold the dedup keys of ``key_parts`` into ``filt``."""
+        inc = _union_all(key_parts).select(F.col("dedup_key").alias("url_hash"))
+        return self._merge_filter(filt, self._build_filter(inc))
+
+    def _empty(self, schema: str) -> DataFrame:
+        """An empty frame of ``schema`` that runs no Python task:
+        ``createDataFrame([])`` parallelizes the empty list into
+        defaultParallelism Python tasks as soon as anything reads it."""
+        return self.spark.createDataFrame(
+            self.spark.sparkContext.emptyRDD(), schema)
 
     # -- A5: range-partitioned priority buckets --------------------------
     def _priority_buckets(self, frontier: DataFrame) -> DataFrame:
@@ -270,18 +330,6 @@ class Crawler:
         self._prev_bucket_tables = []
         last_bucket_table: str | None = None
         scope = cfg.scope_pattern()
-        empty = {
-            "edges": spark.createDataFrame(
-                [], "seed_id string, src_url string, url string, kind string, "
-                    "depth int, iter int"),
-            "images": spark.createDataFrame([], "seed_id string, url string, iter int"),
-            "errors": spark.createDataFrame(
-                [], "seed_id string, url string, error string, stage string, iter int"),
-        }
-        seen_schema = ", ".join(f"{c} {t}" for c, t in [
-            ("seed_id", "string"), ("url", "string"), ("url_hash", "long"),
-            ("dedup_key", "long"), ("host", "string"), ("depth", "int"),
-            ("iter", "int")])
 
         if initial_frontier is not None:
             frontier = initial_frontier
@@ -294,12 +342,15 @@ class Crawler:
             # seeds pass through the same scope gate as everything else
             # (colly URLFilters applies to seed visits too, xcrawl3r.go:273)
             frontier = self.seed_frontier(seeds).filter(F.col("url").rlike(scope))
-        frontier = _ckpt(self._priority_buckets(frontier))
+        # observed above the range exchange: its sampling job re-reads the
+        # rows below it and would count them twice
+        frontier, counts = _ckpt_counted(
+            self._priority_buckets(frontier), rows=F.lit(True))
+        # rows of the frontier the next iteration reads
+        pending = counts["rows"]
         seen0 = _ckpt(
-            initial_seen
-            if initial_seen is not None
-            else spark.createDataFrame([], seen_schema)
-        )
+            initial_seen if initial_seen is not None
+            else self._empty(SEEN_SCHEMA))
 
         # seen = lazy union of per-iteration increments (each a cheap filter
         # over a checkpointed parent); collapsed every SEEN_COLLAPSE_EVERY
@@ -341,7 +392,7 @@ class Crawler:
         )
         it = start_iteration
 
-        while it <= max_iterations and not frontier.isEmpty():
+        while it <= max_iterations and pending:
             m: dict = {"iter": it}
             t0 = time.perf_counter()
             # (1) within-batch dedup at min depth (FIFO-first-visit parity).
@@ -366,9 +417,7 @@ class Crawler:
             # sound. Ineligible rows (media-aborted F3, robots-denied)
             # ride through the politeness window flagged _elig=False:
             # they sort last, never take a budget slot, never select.
-            stale = None
-            for part in bloom_pending:
-                stale = part if stale is None else stale.unionByName(part)
+            stale = _union_all(bloom_pending) if bloom_pending else None
             new = anti_join_seen(
                 cand, seen, key="dedup_key", bloom=bloom,
                 bloom_partitions=cfg.bloom_partitions,
@@ -388,11 +437,14 @@ class Crawler:
                 new = new.withColumn("_robots_ok", F.lit(True))
             elig = ~F.col("_media") & F.col("_robots_ok")
             if cfg.parallelism > 0:
-                flagged = _ckpt(politeness_flag(
-                    new, cfg.parallelism, cfg.skew_salt, eligible=elig))
+                flagged = politeness_flag(
+                    new, cfg.parallelism, cfg.skew_salt, eligible=elig)
             else:
-                flagged = _ckpt(new.withColumn("_elig", elig)
-                                .withColumn("_sel", elig))
+                flagged = new.withColumn("_elig", elig).withColumn("_sel", elig)
+            flagged, counts = _ckpt_counted(
+                flagged, selected=F.col("_sel"),
+                overflow=F.col("_elig") & ~F.col("_sel"))
+            m.update(counts)
             FLAGS = ["_media", "_robots_ok", "_elig", "_sel"]
             media = flagged.filter("_media").drop(*FLAGS)
             selected = flagged.filter("_sel").drop(*FLAGS)
@@ -514,6 +566,16 @@ class Crawler:
                     media_overflow.select("url"), "url", "left_anti")
             m["t_new"] = round(time.perf_counter() - t0, 3)
             t0 = time.perf_counter()
+            # spread a wide wave's Python stages over the cores: the
+            # selected rows often sit in one AQE-coalesced partition that
+            # a broadcast fetch join keeps (and a shuffled join's output
+            # is coalesced the same way), so one Python task would extract
+            # the whole wave. Sizing: EXTRACT_ROWS_PER_TASK.
+            n_tasks = min(spark.sparkContext.defaultParallelism,
+                          m["selected"] // EXTRACT_ROWS_PER_TASK)
+
+            def spread(df: DataFrame) -> DataFrame:
+                return df.repartition(n_tasks, "url") if n_tasks > 1 else df
             # (7) fetch: either the real Arrow-batched HTTP stage
             # (fetch_mode="http" — honors timeout/headers/proxies, per-row
             # error capture) or the deterministic equi-join vs the pages
@@ -532,7 +594,9 @@ class Crawler:
                 # errors commit; storeless runs re-GET when the caller
                 # materializes res.errors). One materialization per
                 # iteration, every consumer reads the disk blocks.
-                fetched = _ckpt(http_fetch(selected, cfg))
+                # spread ahead of the GET: fetch and extraction both
+                # read this checkpoint's n_tasks partitions
+                fetched = _ckpt(http_fetch(spread(selected), cfg))
             else:
                 fetched = selected.join(
                     pages_k, selected.url == pages_k.page_url, "left"
@@ -545,6 +609,11 @@ class Crawler:
                         F.lit("fetch").alias("stage"), F.lit(it).alias("iter"))
             )
             ok = fetched.filter(F.col("body").isNotNull() & (F.col("status") == 200))
+            if cfg.fetch_mode != "http":
+                # after the join, whichever strategy AQE picked for it: a
+                # user repartition ahead of a shuffled join is re-sized to
+                # spark.sql.shuffle.partitions and never coalesced
+                ok = spread(ok)
             ok = ok.withColumn("is_file", U.is_file_col(F.col("url")))
             mined_inc: DataFrame | None = None
             if cfg.obey_robots and robots is None:
@@ -562,8 +631,14 @@ class Crawler:
                     else collapse_robots_rules(
                         robots_rules.unionByName(mined_inc)))
             # (8) extraction (Arrow-batched) + scope filter on emits/visits
-            extracted = extract_links(ok).filter(F.col("url").rlike(scope))
-            extracted = _ckpt(extracted)
+            # children = rows the depth gate below lets into the frontier
+            extracted, counts = _ckpt_counted(
+                extract_links(ok).filter(F.col("url").rlike(scope)),
+                children=(F.col("depth") < cfg.depth if cfg.depth > 0
+                          else F.lit(True)),
+                edges=F.col("kind") != "minvisit")
+            m.update(counts)
+            m["extract_tasks"] = extracted.rdd.getNumPartitions()
             m["t_fetch_extract"] = round(time.perf_counter() - t0, 3)
             t0 = time.perf_counter()
             edges_it = (
@@ -590,6 +665,12 @@ class Crawler:
             frontier = self._priority_buckets(
                 frontier_next.unionByName(requeue)
             )
+            pending = m["children"] + m["overflow"]
+            if not pending and media_overflow is not None:
+                # live payload-budget deferrals are the one requeue no
+                # checkpoint counts; probe them only when nothing else
+                # keeps the loop going
+                pending = int(not media_overflow.isEmpty())
             # The frontier is a cheap bounded-depth transform over this
             # iteration's ALREADY-checkpointed extracted/flagged frames, so
             # its own checkpoint buys no lineage truncation — only a
@@ -636,13 +717,7 @@ class Crawler:
                 # job whose fixed overhead dominates small BFS waves.
                 bloom_pending.append(seen_it.select("dedup_key"))
                 if len(bloom_pending) >= BLOOM_FOLD_EVERY:
-                    inc_src = bloom_pending[0]
-                    for part in bloom_pending[1:]:
-                        inc_src = inc_src.unionByName(part)
-                    bloom = self._merge_filter(
-                        bloom,
-                        self._build_filter(inc_src.select(
-                            F.col("dedup_key").alias("url_hash"))))
+                    bloom = self._fold_filter(bloom, bloom_pending)
                     bloom_pending = []
             m["t_frontier"] = round(time.perf_counter() - t0, 3)
 
@@ -673,13 +748,8 @@ class Crawler:
             metrics.append(m)
             it += 1
 
-        def cat(parts, key):
-            if not parts:
-                return empty[key]
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
+        def cat(parts, schema):
+            return _union_all(parts) if parts else self._empty(schema)
 
         if last_bucket_table is not None:
             # the final seen reads only the LAST-written flip; the other
@@ -691,24 +761,21 @@ class Crawler:
                     spark.sql(f"DROP TABLE IF EXISTS {t}")
             self._prev_bucket_tables = [last_bucket_table]
 
-        if bloom is not None and bloom_pending:
+        def fold_filter():
             # fold the tail increments so the returned filter covers the
             # whole seen set (TTL re-crawl feeds it back via initial_filter)
-            inc_src = bloom_pending[0]
-            for part in bloom_pending[1:]:
-                inc_src = inc_src.unionByName(part)
-            bloom = self._merge_filter(
-                bloom, self._build_filter(
-                    inc_src.select(F.col("dedup_key").alias("url_hash"))))
+            if bloom is None or not bloom_pending:
+                return bloom
+            return self._fold_filter(bloom, bloom_pending)
 
         return CrawlResult(
-            edges=cat(edges_parts, "edges"),
+            edges=cat(edges_parts, EDGES_SCHEMA),
             seen=seen,
-            images=cat(images_parts, "images"),
-            errors=cat(errors_parts, "errors"),
+            images=cat(images_parts, IMAGES_SCHEMA),
+            errors=cat(errors_parts, ERRORS_SCHEMA),
             iterations=it - start_iteration,
             metrics=metrics,
-            seen_filter=bloom,
+            fold_filter=fold_filter,
         )
 
     def resume(
@@ -720,7 +787,9 @@ class Crawler:
         """Continue a checkpointed crawl from its last committed iteration.
 
         Re-runs nothing that committed; the deterministic data plane makes
-        the combined output bit-identical to an uninterrupted run."""
+        the combined output bit-identical to an uninterrupted run. The
+        result's ``metrics`` cover the iterations this call ran; its
+        ``seen_filter`` covers the whole seen set."""
         if self.store is None:
             raise ValueError(
                 "resume() requires cfg.checkpoint_dir or cfg.iceberg_catalog")
@@ -759,4 +828,6 @@ class Crawler:
             images=images if images is not None else res.images,
             errors=errors if errors is not None else res.errors,
             iterations=res.iterations + last,
+            metrics=res.metrics,
+            fold_filter=lambda: res.seen_filter,
         )

@@ -78,6 +78,15 @@ def ship_package(spark: SparkSession) -> None:
     spark.sparkContext.addPyFile(build_pkg_zip())
 
 
+def env_flag(name: str) -> bool:
+    """A boolean environment switch: any truthy spelling (1, true, yes,
+    on, y, t — any case, surrounding blanks ignored) is True; anything
+    else, unset included, is False. Spark's boolean confs accept only
+    true/false, so a raw ``1`` or ``yes`` would fail session start."""
+    return os.environ.get(name, "").strip().lower() in (
+        "1", "true", "yes", "on", "y", "t")
+
+
 def get_spark(
     app: str = "xcrawl3r_spark",
     master: str | None = None,
@@ -102,7 +111,7 @@ def get_spark(
         # hash join skips; AQE's skew handling still applies. Overridable
         # for A/Bs via XCRAWL3R_PREFER_SMJ=true (the pre-r6 behavior).
         .config("spark.sql.join.preferSortMergeJoin",
-                os.environ.get("XCRAWL3R_PREFER_SMJ", "false"))
+                str(env_flag("XCRAWL3R_PREFER_SMJ")).lower())
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
